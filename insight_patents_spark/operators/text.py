@@ -3186,6 +3186,13 @@ def text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Bound on text_hashing_trick's per-task token -> bucket memo: once it
+# holds this many tokens it is cleared and refills, so a high-cardinality
+# vocabulary costs md5 recomputes, never unbounded memory (2^16 entries
+# with 8-character tokens: ~6 MB per task).
+_HASH_MEMO_CAP = 1 << 16
+
+
 @query(
     "text_hashing_trick",
     # Feature hashing (the "hashing trick"): token -> md5 % 16 bucket,
@@ -3222,7 +3229,8 @@ def text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Physical form (r14): one narrow Arrow pass — per document the
     bucket histogram is a 16-slot int array filled at C speed, with the
-    token -> bucket md5 memoized per task over the (Zipf-small) vocab.
+    token -> bucket md5 memoized per task over the (Zipf-small) vocab,
+    the memo capped at ``_HASH_MEMO_CAP`` tokens.
     md5 is a bytes -> bytes contract (Spark hashes the UTF-8 bytes of
     the token, hashlib the same), the bucket index and counts are exact
     integers and the feature string is their decimal join — no floating
@@ -3242,12 +3250,16 @@ def text_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(sh_parts(spark))
     )
 
+    cap = _HASH_MEMO_CAP
+
     def feat(batches):
         memo: dict = {}
 
         def bucket(tok: str) -> int:
             b = memo.get(tok)
             if b is None:
+                if len(memo) >= cap:
+                    memo.clear()
                 # == conv(substring(md5(token), 1, 8), 16, 10) % 16
                 b = (
                     int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:8], 16)

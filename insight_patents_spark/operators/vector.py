@@ -338,9 +338,13 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # bounded candidate collect: the same rows the former build-side
     # broadcast shipped, grouped by label, vec_id-ascending so kernel
-    # shortlists come out cid-ascending
+    # shortlists come out cid-ascending. A NULL label matches nothing
+    # under the label-equality join, so such rows are no candidates (and,
+    # grouped away in the kernel, get no neighbours either).
     by_label: dict = {}
     for r in e.collect():
+        if r["label"] is None:
+            continue
         by_label.setdefault(int(r["label"]), []).append(
             (int(r["vec_id"]), list(r["v"]))
         )

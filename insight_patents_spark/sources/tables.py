@@ -12,6 +12,18 @@ One loader owns every read-side quirk so operators never touch paths:
   between rounds and has changed it once already (round 1 -> 2).
 - All other timestamp columns already read as TIMESTAMP_NTZ.
 
+Pinned read schemas: a schema-less ``spark.read.parquet`` infers the
+schema from the file footers with a one-task Spark job on EVERY call.
+Every read here goes through ``read_raw``, which infers a table's schema
+once and records the ``StructType`` under the key
+``(applicationId, sf_dir, name, src_stamp(sf_dir, name))``; later reads
+pass it to ``spark.read.schema(...)`` and start no job. The key is
+session-scoped (a new SparkContext re-infers) and a regenerated source
+file (new mtime or size) re-infers, the same invalidation rule as the
+``src_stamp``-keyed scratch caches. Only the schema is cached, never a
+DataFrame: each read is a fresh relation with fresh attribute ids, so
+self-joins and ``df["col"]`` references behave as with a plain read.
+
 At 100 TB these loaders are the single place to attach bucketing /
 partition-pruning metadata; operators stay declarative against them.
 """
@@ -20,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -41,6 +54,9 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
 _NTZ_EPOCH = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
+# (applicationId, sf_dir, name, src_stamp) -> schema of the first read
+_SCHEMAS: dict[tuple[str, str, str, str], StructType] = {}
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table from ``sf_dir`` by name."""
@@ -48,12 +64,27 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_raw(spark, sf_dir, name)
+
+
+def read_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table as stored, read under its pinned schema (module doc):
+    only the first read per (session, source version) infers it. events
+    is read with nanosAsLong set, so NANOS timestamps arrive as bigint."""
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = f"{sf_dir}/{name}.parquet"
+    key = (spark.sparkContext.applicationId, sf_dir, name, src_stamp(sf_dir, name))
+    pinned = _SCHEMAS.get(key)
+    if pinned is not None:
+        return spark.read.schema(pinned).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_raw(spark, sf_dir, "events")
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         # nanos-as-long read: truncate (integer div) to micros and rebase

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.tables import load
+from ..sources.tables import load, read_raw
 
 # Streaming scratch (checkpoints + the µs-converted source copy). A
 # checkpoint location is a deployment knob (HDFS/S3 on a cluster); locally
@@ -53,10 +53,11 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     TimestampType. Branch on the observed dtype (the driver has shipped
     both ns-parquet and µs-parquet events): bigint nanos go through
     timestamp_micros (epoch-exact, tz-independent); a native
-    TIMESTAMP_NTZ read is cast under the UTC session tz (epoch-exact)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    TIMESTAMP_NTZ read is cast under the UTC session tz (epoch-exact).
+    The read carries the pinned source schema, so ``.schema`` of the
+    result (the streaming read schema) costs no job."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw(spark, sf_dir, "events")
     if dict(raw.dtypes).get("ts") == "bigint":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -76,22 +77,9 @@ def _events_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-_SCHEMA_CACHE: dict[tuple[str, str], "T.StructType"] = {}
-
-
-def _stream_schema(spark: SparkSession, sf_dir: str):
-    """Converted-events schema, cached per (app, source): deriving it
-    spins up a batch parquet read (footer job), so only the first
-    streaming query in the app pays that."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = _events_us(spark, sf_dir).schema
-    return _SCHEMA_CACHE[key]
-
-
 def _read_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_stream_dir(spark, sf_dir)
-    return spark.readStream.schema(_stream_schema(spark, sf_dir)).parquet(src)
+    return spark.readStream.schema(_events_us(spark, sf_dir).schema).parquet(src)
 
 
 # State-store partition count for streaming queries. Baked into each
@@ -368,7 +356,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(out_dir, f"f{i}")
             )
         open(os.path.join(out_dir, "_done"), "w").close()
-    schema = _stream_schema(spark, sf_dir)
+    schema = _events_us(spark, sf_dir).schema
     s = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -617,7 +605,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Attribution-window semantics (click-to-purchase), the canonical
     stream-stream use."""
     src = _events_stream_dir_single(spark, sf_dir)
-    schema = _stream_schema(spark, sf_dir)
+    schema = _events_us(spark, sf_dir).schema
     clicks = (
         spark.readStream.schema(schema)
         .parquet(src)

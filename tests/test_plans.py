@@ -127,14 +127,25 @@ def test_context_chunk_has_no_shuffle(spark, sf_dir):
     assert "Exchange" not in formatted_plan(text_context_chunk(spark, sf_dir))
 
 
+def _plan_nodes(plan: str, node: str) -> list[str]:
+    """Argument lines of every ``node`` operator in a formatted plan's
+    detail section (one per operator, unlike the tree rendering)."""
+    return re.findall(
+        rf"^\(\d+\) {node}$\n(?:.+\n)*?Arguments: (.*)$", plan, re.M
+    )
+
+
 def test_cosine_topk_probe_join_is_broadcast(spark, sf_dir):
-    # the label-blocked pair build must be a broadcast join (no shuffle of
-    # the probe side besides its explicit fan-out repartition)
+    # the label-blocked pair scoring runs against a broadcast candidate
+    # table inside one Arrow kernel: no join of any kind, no window, and
+    # the only shuffle is the probe side's round-robin fan-out
     from insight_patents_spark.operators.vector import vec_cosine_topk
 
     plan = formatted_plan(vec_cosine_topk(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
+    assert "ArrowEvalPython" in plan
+    assert "Join" not in plan and "Window" not in plan
+    exchanges = _plan_nodes(plan, "Exchange")
+    assert len(exchanges) == 1 and "RoundRobinPartitioning" in exchanges[0]
 
 
 def test_link_predict_degree_joins_are_broadcast(spark, sf_dir):
@@ -267,9 +278,13 @@ def test_repetition_aggs_are_partial(spark, sf_dir):
     from insight_patents_spark.operators.text import text_repetition
 
     plan = formatted_plan(text_repetition(spark, sf_dir))
-    # bigram count + per-doc rollup: both hash-aggregates with map-side
-    # partials (4+ HashAggregate nodes across the two stages)
-    assert plan.count("HashAggregate") >= 4
+    # every per-doc statistic comes out of one narrow Arrow pass: no
+    # aggregate, no join, and the only shuffle is the round-robin fan-out
+    # of the documents scan
+    assert "MapInPandas" in plan
+    assert "HashAggregate" not in plan and "Join" not in plan
+    exchanges = _plan_nodes(plan, "Exchange")
+    assert len(exchanges) == 1 and "RoundRobinPartitioning" in exchanges[0]
 
 
 def test_ewma_uses_single_window_pass(spark, sf_dir):

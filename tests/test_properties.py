@@ -4590,6 +4590,86 @@ def _sorted_fold_pairs(pairs):
     return acc
 
 
+def _oracle_on(name, **tables_at):
+    """DuckDB oracle of ``name`` with each given table read from the given
+    parquet path."""
+    import duckdb
+
+    from insight_patents_spark import registry
+
+    con = duckdb.connect()
+    for t, path in tables_at.items():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    try:
+        return con.execute(registry.load_all()[name].oracle).df()
+    finally:
+        con.close()
+
+
+def test_cosine_topk_skips_null_label(spark, sf_dir, tmp_path):
+    """An embedding with a NULL label: the oracle's label-equality join
+    drops it on both sides (no neighbours, never a neighbour). The engine
+    must match that exactly instead of failing in its candidate collect."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from insight_patents_spark.operators.vector import vec_cosine_topk
+    from tools.check import compare
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    labels = t.column("label").to_pylist()
+    labels[0] = None
+    i = t.schema.get_field_index("label")
+    t = t.set_column(i, "label", pa.array(labels, pa.int32()))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    null_id = t.column("vec_id")[0].as_py()
+
+    got = vec_cosine_topk(spark, str(tmp_path)).toPandas()
+    want = _oracle_on(
+        "vec_cosine_topk", embeddings=str(tmp_path / "embeddings.parquet")
+    )
+    assert not compare("vec_cosine_topk", got, want)
+    assert null_id not in set(got.vec_id) | set(got.neighbor_id)
+    assert len(got) == 3 * (t.num_rows - 1)
+
+
+def test_hashing_trick_high_cardinality_vocab(spark, tmp_path, monkeypatch):
+    """text_hashing_trick over a vocabulary far above its memo cap (cap
+    lowered to 64 so every task clears its memo many times), plus a NULL
+    text and empty tokens: the output stays equal to the DuckDB oracle."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import insight_patents_spark.operators.text as text_mod
+    from tools.check import compare
+
+    rng = random.Random(7)
+    texts = [
+        " ".join(f"w{rng.getrandbits(40):x}" for _ in range(rng.randint(1, 40)))
+        for _ in range(400)
+    ]
+    texts[1] = None
+    texts[2] = "a  b "  # empty tokens count, as in Spark's split
+    vocab = {w for x in texts if x for w in x.split(" ")}
+    assert len(vocab) > 100 * 64
+    pq.write_table(
+        pa.table(
+            {"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}
+        ),
+        tmp_path / "documents.parquet",
+    )
+    monkeypatch.setattr(text_mod, "_HASH_MEMO_CAP", 64)
+
+    got = text_mod.text_hashing_trick(spark, str(tmp_path)).toPandas()
+    want = _oracle_on(
+        "text_hashing_trick", documents=str(tmp_path / "documents.parquet")
+    )
+    assert not compare("text_hashing_trick", got, want)
+    assert len(got) == len(texts)
+
+
 def test_jaccard_containment_incremental_match_python(spark, sf_dir):
     """text_jaccard_tokens (exact J>=0.9 pairs vs brute force),
     text_minhash_containment (sound: every pair's containment exact and

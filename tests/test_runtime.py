@@ -6,13 +6,23 @@ while shared-cache checkpoints (and persist()-based SQL caches) survive
 and their downstream consumers still execute. Unpersisting a live
 localCheckpoint is unrecoverable (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
 so the protection logic is load-bearing, not an optimization.
+
+Also pins the source loaders' per-session schema pinning
+(sources/tables.py): a repeated load starts no schema-inference job,
+and a regenerated source file is re-inferred.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 from insight_patents_spark import registry, runtime
+from insight_patents_spark.sources import tables
 
 
 def _persistent_ids(spark) -> set[int]:
@@ -105,3 +115,72 @@ def test_ephemeral_checkpoints_do_not_accumulate(spark, sf_dir):
     for k in jmap.keySet().toArray():
         if int(k) in leftover:
             assert not jmap.get(k).rdd().checkpointData().isDefined()
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return (its result, the
+    number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fresh_schema(spark, path):
+    # a schema-less read, as Spark infers it (events under nanosAsLong,
+    # the conf every events read in the engine sets)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path).schema
+
+
+def test_repeat_load_starts_no_schema_job(spark, sf_dir):
+    for name in tables.TABLE_NAMES:
+        first = tables.load(spark, sf_dir, name)
+        again, jobs = _jobs_in_group(
+            spark, f"pin:{name}", lambda: tables.load(spark, sf_dir, name)
+        )
+        assert jobs == 0, f"{name}: repeat load started {jobs} job(s)"
+        assert again.schema == first.schema, name
+        raw = tables.read_raw(spark, sf_dir, name)
+        assert raw.schema == _fresh_schema(spark, f"{sf_dir}/{name}.parquet"), name
+
+
+def test_regenerated_source_is_reinferred(spark, sf_dir, tmp_path):
+    # a copy of events in a fresh dir: its first read infers (a job),
+    # the second does not
+    src = f"{sf_dir}/events.parquet"
+    path = tmp_path / "events.parquet"
+    shutil.copyfile(src, path)
+    d = str(tmp_path)
+    _, jobs = _jobs_in_group(
+        spark, "pin:first", lambda: tables.read_raw(spark, d, "events").schema
+    )
+    assert jobs >= 1, "first read of a new source must infer its schema"
+    _, jobs = _jobs_in_group(
+        spark, "pin:second", lambda: tables.read_raw(spark, d, "events").schema
+    )
+    assert jobs == 0
+    # regenerate it with ts as TIMESTAMP(NANOS): a new (mtime, size)
+    # stamp, and a schema the pinned one no longer describes (ts reads as
+    # bigint nanos under nanosAsLong)
+    t = pq.read_table(src)
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, path)
+    st = os.stat(path)
+    os.utime(path, (st.st_atime, st.st_mtime + 10))
+    raw, jobs = _jobs_in_group(
+        spark, "pin:regen", lambda: tables.read_raw(spark, d, "events")
+    )
+    assert jobs >= 1, "a regenerated source must be re-inferred"
+    assert raw.schema == _fresh_schema(spark, str(path))
+    assert dict(raw.dtypes)["ts"] == "bigint"
+    # load() still rebases the nanos onto the same wall clock
+    cols = ("event_id", "ts")
+    want = sorted(tables.load(spark, sf_dir, "events").select(*cols).collect())
+    got = sorted(tables.load(spark, d, "events").select(*cols).collect())
+    assert got == want
