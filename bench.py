@@ -94,18 +94,14 @@ def main() -> None:
         timings["_cache_warm"] = round(time.time() - t0, 3)
     # Per-query state hygiene (VERDICT r10 #1 — the full-run inflation):
     # after each query's sink commits, unpersist its ephemeral
-    # localCheckpoints (shared caches protected via the runtime registry)
+    # localCheckpoints (shared artifacts protected by runtime.shared)
     # and periodically nudge the JVM GC so ContextCleaner reclaims
     # finished broadcasts. Both run OUTSIDE the timed window, but they
     # change the steady-state storage/GC conditions EVERY query runs
     # under — so r11+ maps are a NEW BASELINE, not directly comparable
     # with r1-r10 maps except one-sidedly (r11+ rows can only be equal
     # or faster for the same plan; ADVICE r11). Cross-round deltas
-    # should compare r11+ against r11+; to reproduce the old conditions
-    # set IPS_BENCH_RELEASE=0. Bisect knobs (attribution experiments
-    # only; both default ON):
-    _GC_EVERY = int(os.environ.get("IPS_BENCH_GC_EVERY", "25"))  # 0 = off
-    _RELEASE = os.environ.get("IPS_BENCH_RELEASE", "1") != "0"
+    # should compare r11+ against r11+.
     for i, name in enumerate(names):
         t0 = time.time()
         try:
@@ -115,9 +111,8 @@ def main() -> None:
             timings[name] = -1.0
             print(f"# BENCH ERROR {name}: {type(e).__name__}: {str(e)[:200]}",
                   file=sys.stderr)
-        if _RELEASE:
-            release_ephemeral(spark)
-        if _GC_EVERY and (i + 1) % _GC_EVERY == 0:
+        release_ephemeral(spark)
+        if (i + 1) % 25 == 0:
             spark.sparkContext._jvm.System.gc()
 
     # Contention stabilization (VERDICT r8 #6, symmetric since r10 per

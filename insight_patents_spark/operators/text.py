@@ -27,8 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..runtime import register_shared_cache
-from ..sources.tables import load, src_stamp
+from ..runtime import shared
+from ..sources.tables import load
 
 # Inline fixtures (FIXTURES.md §5): defined identically in both engines.
 LEXICON = [  # (token, integer weight) — integer so group sums are exact
@@ -314,25 +314,6 @@ def _jaccard_docs_cte(threshold: float) -> str:
     """
 
 
-# (app, sf, stamp) -> (classes, ids): the threshold-INDEPENDENT half of
-# the dense-domain Jaccard join — the token-set class table (sig, n,
-# 63-bit mask) and the doc_id -> sig map. text_jaccard_tokens (J>=0.9)
-# and dedup_eval's truth arm (J>=0.7) build the identical tables; at
-# 100 TB the class table is written once and every threshold query
-# reads it (the verified_pairs contract). First touch stays charged to
-# whichever query the rotation runs first.
-_JACCARD_CLASS_CACHE: dict[
-    tuple[str, str, str], tuple[DataFrame, DataFrame]
-] = register_shared_cache({})
-
-# (app, sf, stamp) -> (vocab_size, n_classes): the strategy-probe pair
-# both adaptive Jaccard operators collect before choosing the bitmask
-# vs PPJoin path — two bounded driver scalars, same for both.
-_JACCARD_PROBE_CACHE: dict[tuple[str, str, str], tuple[int, int]] = (
-    register_shared_cache({})
-)
-
-
 def _jaccard_probe(
     spark: SparkSession, sf_dir: str, d: DataFrame
 ) -> tuple[int, int]:
@@ -341,15 +322,12 @@ def _jaccard_probe(
     the vocab (the decision only asks "fits 63 bits?"), and the class
     count read off the shared checkpointed class table that every
     dense-path consumer builds next anyway (never a full token-stream
-    pass per scalar, never a 2-column Expand multi-distinct). Cached
-    per (app, sf, stamp) so the second consumer pays no driver
-    round-trips."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key not in _JACCARD_PROBE_CACHE:
+    pass per scalar, never a 2-column Expand multi-distinct). A shared
+    artifact: both adaptive Jaccard operators collect the same two
+    bounded driver scalars before choosing the bitmask vs PPJoin path,
+    so the second consumer pays no driver round-trips."""
+
+    def build() -> tuple[int, int]:
         toks = F.array_distinct(_tokens())
         # Bounded vocab probe (r13): the strategy only asks "<= 63?",
         # so collect at most 64 distinct tokens in ONE job instead of a
@@ -377,63 +355,63 @@ def _jaccard_probe(
             # PPJoin path: the cap conjunct is short-circuited by
             # vocab_size > 63; carry an over-cap sentinel.
             n_classes = _JACCARD_CLASS_CAP + 1
-        _evict_stale(_JACCARD_PROBE_CACHE, key)
-        _JACCARD_PROBE_CACHE[key] = (vocab_size, n_classes)
-    return _JACCARD_PROBE_CACHE[key]
+        return vocab_size, n_classes
+
+    return shared(spark, sf_dir, "text.jaccard_probe", "documents", build)
 
 
 def _jaccard_class_tables(
     spark: SparkSession, sf_dir: str, d: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """The (classes, ids) pair backing :func:`_jaccard_bitmask`, built
-    once per (app, sf, stamp): classes = (sig, n, mask) checkpointed,
-    ids = (doc_id, sig) checkpointed (it feeds two expansion joins per
+    """The (classes, ids) pair backing :func:`_jaccard_bitmask`, a
+    shared artifact: classes = (sig, n, mask) checkpointed, ids =
+    (doc_id, sig) checkpointed (it feeds two expansion joins per
     consumer — without the checkpoint the per-doc md5 scan re-runs for
-    each)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _JACCARD_CLASS_CACHE:
-        return _JACCARD_CLASS_CACHE[key]
-    toks = F.array_distinct(F.split(F.col("text"), " "))
-    docs = d.select(
-        "doc_id",
-        toks.alias("toks"),
-        F.size(toks).cast("bigint").alias("n"),
-        F.md5(F.array_join(F.sort_array(toks), "|")).alias("sig"),
-    )
-    # global vocab index (driver-side: ≤63 entries by construction)
-    vocab = sorted(
-        r["t"] for r in d.select(F.explode(toks).alias("t")).distinct().collect()
-    )
-    bit = {t: i for i, t in enumerate(vocab)}
-    mask_expr = F.aggregate(
-        F.transform(
-            F.col("toks"),
-            lambda t: F.element_at(
-                F.map_from_arrays(
-                    F.array(*[F.lit(t2) for t2 in vocab]),
-                    F.array(*[F.lit(1 << bit[t2]).cast("long") for t2 in vocab]),
+    each). This is the threshold-INDEPENDENT half of the dense-domain
+    Jaccard join: text_jaccard_tokens (J>=0.9) and dedup_eval's truth
+    arm (J>=0.7) build the identical tables; at 100 TB the class table
+    is written once and every threshold query reads it (the
+    verified_pairs contract). First touch stays charged to whichever
+    query the rotation runs first."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        toks = F.array_distinct(F.split(F.col("text"), " "))
+        docs = d.select(
+            "doc_id",
+            toks.alias("toks"),
+            F.size(toks).cast("bigint").alias("n"),
+            F.md5(F.array_join(F.sort_array(toks), "|")).alias("sig"),
+        )
+        # global vocab index (driver-side: ≤63 entries by construction)
+        vocab = sorted(
+            r["t"] for r in d.select(F.explode(toks).alias("t")).distinct().collect()
+        )
+        bit = {t: i for i, t in enumerate(vocab)}
+        mask_expr = F.aggregate(
+            F.transform(
+                F.col("toks"),
+                lambda t: F.element_at(
+                    F.map_from_arrays(
+                        F.array(*[F.lit(t2) for t2 in vocab]),
+                        F.array(*[F.lit(1 << bit[t2]).cast("long") for t2 in vocab]),
+                    ),
+                    t,
                 ),
-                t,
             ),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-    classes = (
-        docs.groupBy("sig")
-        .agg(F.first("toks").alias("toks"), F.first("n").alias("n"))
-        .withColumn("mask", mask_expr)
-        .select("sig", "n", "mask")
-        .localCheckpoint()
-    )
-    ids = docs.select("doc_id", "sig").localCheckpoint()
-    _evict_stale(_JACCARD_CLASS_CACHE, key)
-    _JACCARD_CLASS_CACHE[key] = (classes, ids)
-    return classes, ids
+            F.lit(0).cast("long"),
+            lambda acc, x: acc.bitwiseOR(x),
+        )
+        classes = (
+            docs.groupBy("sig")
+            .agg(F.first("toks").alias("toks"), F.first("n").alias("n"))
+            .withColumn("mask", mask_expr)
+            .select("sig", "n", "mask")
+            .localCheckpoint()
+        )
+        ids = docs.select("doc_id", "sig").localCheckpoint()
+        return classes, ids
+
+    return shared(spark, sf_dir, "text.jaccard_classes", "documents", build)
 
 
 def _jaccard_bitmask(
@@ -634,34 +612,6 @@ def _doc_sig_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_sig_mask_chunks(spark, sf_dir)[0]
 
 
-# (session, sf) -> (checkpointed signature table, n_chunks). The sig table
-# feeds a SELF-join in dedup_minhash_pairs; without materialization Spark
-# rebuilds the whole scan->vocab->aggregate pipeline on BOTH join sides
-# (verified in the r1 physical plan: duplicated subtrees). At cluster
-# scale this is "write signatures to a table, then LSH over the table" —
-# localCheckpoint is the single-node equivalent.
-_SIG_CACHE: dict[tuple[str, str, str], tuple[DataFrame, int]] = (
-    register_shared_cache({})
-)
-
-
-def _evict_stale(cache: dict, key: tuple[str, str, str]) -> None:
-    """Bound the (app, sf_dir, stamp)-keyed checkpoint caches (ADVICE
-    r9): before inserting ``key``, drop entries owned by a DIFFERENT
-    application (their SparkContext is gone — the pinned checkpoint
-    RDDs are unreclaimable garbage) and entries for the SAME (app,
-    sf_dir) under a superseded source stamp (the driver regenerated the
-    data; nothing can cache-hit the old stamp again). Live entries for
-    other sf_dirs in the same app stay — concurrent multi-SF use is
-    legitimate."""
-    for k in [
-        k
-        for k in cache
-        if k[0] != key[0] or (k[1] == key[1] and k[2] != key[2])
-    ]:
-        del cache[k]
-
-
 def _doc_sig_mask_chunks(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, int]:
@@ -678,68 +628,69 @@ def _doc_sig_mask_chunks(
     100 TB a token dictionary may exceed broadcast size — then the
     bitset degrades gracefully back to sorted-int-array intersection;
     the signature path (broadcast of per-token hash rows) is unchanged
-    because it only ever ships |vocab| rows, not |docs|."""
-    # applicationId (not id(spark): reusable after GC) + source stamp (the
-    # driver regenerates testdata; an in-process regen must not serve a
-    # stale checkpointed signature table).
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _SIG_CACHE:
-        return _SIG_CACHE[key]
-    # ONE corpus tokenization for the whole minhash family (r14,
-    # VERDICT r13 #2): the shared (doc, token, tf) table's rows ARE the
-    # distinct (doc, token) pairs, so signatures + bitsets build from
-    # the checkpointed table instead of re-exploding documents — the
-    # weighted/ICWS variants and every LSH consumer now ride the same
-    # single tokenize pass. The doc_id-keyed repartition fans the
-    # hash-join + 16-way min agg out of the table's few coalesced
-    # checkpoint partitions AND lets the groupBy ride the same
-    # partitioning with no further exchange (guide §2.2/§2.4).
-    tok = _doc_token_tf(spark, sf_dir).repartition(
-        sh_parts(spark), "doc_id"
-    ).select("doc_id", "token")
-    vocab = (
-        tok.select("token")
-        .distinct()
-        .withColumn("tid", F.row_number().over(Window.orderBy("token")) - 1)
-    )
-    # Dictionary size drives the bitset width; collecting this one scalar
-    # is a stats job (AQE-style), not a data collect.
-    n_vocab = vocab.count()
-    n_chunks = max(1, (n_vocab + 63) // 64)
-    vocab_h = vocab.select(
-        "token",
-        "tid",
-        *[
-            F.md5(F.concat(F.lit(s), F.lit(":"), F.col("token"))).alias(f"h{i}")
-            for i, s in enumerate(MINHASH_SEEDS)
-        ],
-    )
-    aggs = [F.min(f"h{i}").alias(f"h{i}") for i in range(len(MINHASH_SEEDS))]
-    aggs += [
-        F.bit_or(
-            F.when(
-                F.expr(f"tid DIV 64 = {c}"),
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(tid % 64 AS INT))"),
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"m{c}")
-        for c in range(n_chunks)
-    ]
-    g = tok.join(F.broadcast(vocab_h), "token").groupBy("doc_id").agg(
-        *aggs, F.count("*").alias("n")
-    )
-    out = g.select(
-        "doc_id",
-        F.array(*[f"h{i}" for i in range(len(MINHASH_SEEDS))]).alias("signature"),
-        F.array(*[f"m{c}" for c in range(n_chunks)]).alias("mask"),
-        "n",
-    ).localCheckpoint()
-    _evict_stale(_SIG_CACHE, key)
-    _SIG_CACHE[key] = (out, n_chunks)
-    return out, n_chunks
+    because it only ever ships |vocab| rows, not |docs|.
+
+    A shared artifact, (checkpointed signature table, n_chunks): the sig
+    table feeds a SELF-join in dedup_minhash_pairs; without
+    materialization Spark rebuilds the whole scan->vocab->aggregate
+    pipeline on BOTH join sides (verified in the r1 physical plan:
+    duplicated subtrees). At cluster scale this is "write signatures to
+    a table, then LSH over the table" — localCheckpoint is the
+    single-node equivalent."""
+    by_token = Window.orderBy("token")  # dense vocab dict ids
+
+    def build() -> tuple[DataFrame, int]:
+        # ONE corpus tokenization for the whole minhash family (r14,
+        # VERDICT r13 #2): the shared (doc, token, tf) table's rows ARE the
+        # distinct (doc, token) pairs, so signatures + bitsets build from
+        # the checkpointed table instead of re-exploding documents — the
+        # weighted/ICWS variants and every LSH consumer now ride the same
+        # single tokenize pass. The doc_id-keyed repartition fans the
+        # hash-join + 16-way min agg out of the table's few coalesced
+        # checkpoint partitions AND lets the groupBy ride the same
+        # partitioning with no further exchange (guide §2.2/§2.4).
+        tok = _doc_token_tf(spark, sf_dir).repartition(
+            sh_parts(spark), "doc_id"
+        ).select("doc_id", "token")
+        vocab = (
+            tok.select("token")
+            .distinct()
+            .withColumn("tid", F.row_number().over(by_token) - 1)
+        )
+        # Dictionary size drives the bitset width; collecting this one scalar
+        # is a stats job (AQE-style), not a data collect.
+        n_vocab = vocab.count()
+        n_chunks = max(1, (n_vocab + 63) // 64)
+        vocab_h = vocab.select(
+            "token",
+            "tid",
+            *[
+                F.md5(F.concat(F.lit(s), F.lit(":"), F.col("token"))).alias(f"h{i}")
+                for i, s in enumerate(MINHASH_SEEDS)
+            ],
+        )
+        aggs = [F.min(f"h{i}").alias(f"h{i}") for i in range(len(MINHASH_SEEDS))]
+        aggs += [
+            F.bit_or(
+                F.when(
+                    F.expr(f"tid DIV 64 = {c}"),
+                    F.expr("shiftleft(CAST(1 AS BIGINT), CAST(tid % 64 AS INT))"),
+                ).otherwise(F.lit(0).cast("long"))
+            ).alias(f"m{c}")
+            for c in range(n_chunks)
+        ]
+        g = tok.join(F.broadcast(vocab_h), "token").groupBy("doc_id").agg(
+            *aggs, F.count("*").alias("n")
+        )
+        out = g.select(
+            "doc_id",
+            F.array(*[f"h{i}" for i in range(len(MINHASH_SEEDS))]).alias("signature"),
+            F.array(*[f"m{c}" for c in range(n_chunks)]).alias("mask"),
+            "n",
+        ).localCheckpoint()
+        return out, n_chunks
+
+    return shared(spark, sf_dir, "text.minhash_sig", "documents", build)
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -960,37 +911,29 @@ def text_mix_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (app, sf, stamp) -> checkpointed (doc_id, token, tf) counts: the
-# token-frequency table BOTH weighted-minhash variants build signatures
-# from (integer copy-replication for dedup_minhash_weighted, sublinear
-# 1+ln(tf) weights for dedup_minhash_icws) — built once per session,
-# every consumer reads it (the verified_pairs contract; first touch
-# charged to whichever query runs first). At 100 TB this is "write the
-# tf table, sign over the table".
-_TF_CACHE: dict[tuple[str, str, str], DataFrame] = register_shared_cache({})
-
-
 def _doc_token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _TF_CACHE:
-        return _TF_CACHE[key]
-    tf = (
-        load(spark, sf_dir, "documents")
-        # fan the explode + partial count out of the single input split
-        # (guide §2.5; a real corpus scan has many splits)
-        .repartition(sh_parts(spark))
-        .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
-    _evict_stale(_TF_CACHE, key)
-    _TF_CACHE[key] = tf
-    return tf
+    """Shared checkpointed (doc_id, token, tf) counts: the
+    token-frequency table the signature table and BOTH weighted-minhash
+    variants build from (integer copy-replication for
+    dedup_minhash_weighted, sublinear 1+ln(tf) weights for
+    dedup_minhash_icws) — built once per session, every consumer reads
+    it (the verified_pairs contract; first touch charged to whichever
+    query runs first). At 100 TB this is "write the tf table, sign over
+    the table"."""
+
+    def build() -> DataFrame:
+        return (
+            load(spark, sf_dir, "documents")
+            # fan the explode + partial count out of the single input
+            # split (guide §2.5; a real corpus scan has many splits)
+            .repartition(sh_parts(spark))
+            .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+            .groupBy("doc_id", "token")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .localCheckpoint()
+        )
+
+    return shared(spark, sf_dir, "text.token_tf", "documents", build)
 
 
 _WMH_SEEDS = MINHASH_SEEDS[:8]  # 2 bands x 4 rows
@@ -1105,7 +1048,7 @@ def dedup_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize signatures+bitsets ONCE: the band self-join below
     # would otherwise rebuild the scan->window->agg chain on BOTH sides
-    # (the _SIG_CACHE lesson from the unweighted family)
+    # (the lesson of the unweighted family's shared signature table)
     sig = el.join(F.broadcast(vocab_h), "elem").groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(len(_WMH_SEEDS))],
         *[
@@ -1271,7 +1214,7 @@ def _icws_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc ICWS signature table: one min(struct) per seed plus the
     doc's (token -> nano-unit weight) map and total weight for exact
     verification. localCheckpointed — the probe band join consumes it
-    on both sides (the _SIG_CACHE lesson). Exposed for the
+    on both sides (the shared signature table's lesson). Exposed for the
     exact-Python-replay test."""
     # shared, checkpointed (doc, token, tf) table (see _doc_token_tf):
     # it feeds BOTH the sampler-vocab distinct and the per-row keys
@@ -4449,88 +4392,80 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Learned-merge cache: text_bpe_train and text_tokenizer_apply share one
-# training run per (session, sf_dir, source-stamp) — same posture as the
-# graph edge cache (_LPA_CACHE): recomputing an iterative loop inside a
-# downstream query is the r3-verdict anti-pattern.
-_BPE_MERGE_CACHE: dict = {}
-
-
 def _bpe_learn(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Run the 6-round Sennrich merge loop; returns
-    [(rank, l, r, merged, count)]. See text_bpe_train for semantics."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _BPE_MERGE_CACHE:
-        return _BPE_MERGE_CACHE[key]
-    d = load(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.length("w") > 0)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.concat(
-                F.lit("|"),
-                F.array_join(
-                    F.expr(
-                        "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-                    ),
-                    "|",
-                ),
-                F.lit("|"),
-            ).alias("s"),
-            "n",
-        )
-        .localCheckpoint()
-    )
-    merges = []
-    for r in range(1, _BPE_ROUNDS + 1):
-        sym = F.split(F.expr("trim(BOTH '|' FROM s)"), r"\|")
-        pairs = (
-            words.select(sym.alias("sym"), "n")
-            # single-symbol words contribute no pairs — and Spark's
-            # sequence(1, 0) is DESCENDING [1, 0], so they must not
-            # reach the transform at all
-            .filter(F.size("sym") >= 2)
+    [(rank, l, r, merged, count)]. See text_bpe_train for semantics.
+    A shared artifact: text_bpe_train and text_tokenizer_apply share one
+    training run — recomputing an iterative loop inside a downstream
+    query is the r3-verdict anti-pattern."""
+
+    def build() -> list[tuple]:
+        d = load(spark, sf_dir, "documents")
+        words = (
+            d.select(F.explode(F.split("text", " ")).alias("w"))
+            .filter(F.length("w") > 0)
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("n"))
             .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(sym) - 1), "
-                        "i -> struct(sym[i - 1] AS l, sym[i] AS r))"
-                    )
-                ).alias("p"),
+                F.concat(
+                    F.lit("|"),
+                    F.array_join(
+                        F.expr(
+                            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+                        ),
+                        "|",
+                    ),
+                    F.lit("|"),
+                ).alias("s"),
                 "n",
             )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("n").alias("cnt"))
+            .localCheckpoint()
         )
-        top = pairs.orderBy(
-            F.col("cnt").desc(), F.col("l"), F.col("r")
-        ).limit(1).collect()  # guarded 1-row argmax per round
-        if not top:  # degenerate corpus (no adjacent pairs left)
-            raise RuntimeError(
-                f"text_bpe_train: pair table exhausted before round {r} "
-                f"of {_BPE_ROUNDS} (corpus too small for the configured "
-                f"merge count)"
+        merges = []
+        for r in range(1, _BPE_ROUNDS + 1):
+            sym = F.split(F.expr("trim(BOTH '|' FROM s)"), r"\|")
+            pairs = (
+                words.select(sym.alias("sym"), "n")
+                # single-symbol words contribute no pairs — and Spark's
+                # sequence(1, 0) is DESCENDING [1, 0], so they must not
+                # reach the transform at all
+                .filter(F.size("sym") >= 2)
+                .select(
+                    F.explode(
+                        F.expr(
+                            "transform(sequence(1, size(sym) - 1), "
+                            "i -> struct(sym[i - 1] AS l, sym[i] AS r))"
+                        )
+                    ).alias("p"),
+                    "n",
+                )
+                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                .agg(F.sum("n").alias("cnt"))
             )
-        best = top[0]
-        merges.append(
-            (r, best.l, best.r, best.l + best.r, int(best.cnt))
-        )
-        words = words.select(
-            F.replace(
-                F.col("s"),
-                F.lit(f"|{best.l}|{best.r}|"),
-                F.lit(f"|{best.l}{best.r}|"),
-            ).alias("s"),
-            "n",
-        ).localCheckpoint()
-    _BPE_MERGE_CACHE[key] = merges
-    return merges
+            top = pairs.orderBy(
+                F.col("cnt").desc(), F.col("l"), F.col("r")
+            ).limit(1).collect()  # guarded 1-row argmax per round
+            if not top:  # degenerate corpus (no adjacent pairs left)
+                raise RuntimeError(
+                    f"text_bpe_train: pair table exhausted before round {r} "
+                    f"of {_BPE_ROUNDS} (corpus too small for the configured "
+                    f"merge count)"
+                )
+            best = top[0]
+            merges.append(
+                (r, best.l, best.r, best.l + best.r, int(best.cnt))
+            )
+            words = words.select(
+                F.replace(
+                    F.col("s"),
+                    F.lit(f"|{best.l}|{best.r}|"),
+                    F.lit(f"|{best.l}{best.r}|"),
+                ).alias("s"),
+                "n",
+            ).localCheckpoint()
+        return merges
+
+    return shared(spark, sf_dir, "text.bpe_merges", "documents", build)
 
 
 def _bpe_encode_oracle() -> str:
@@ -4578,8 +4513,8 @@ def text_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression ratio (the metric tokenizer quality is judged by)
     come from one hash agg.
 
-    Scale shape: training state is shared via the session merge cache
-    (one training run per sf_dir, the _LPA_CACHE posture); encoding
+    Scale shape: training state is a shared artifact (one training run
+    per session and corpus version, like the graph LPA labels); encoding
     itself is zero-shuffle in-row string work at scan speed — the
     merge list rides INTO the plan as literals (at 50k merges it
     becomes a broadcast map + a join-free UDF-less loop unroll, same
@@ -4621,30 +4556,21 @@ def text_tokenizer_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUP_CC_ROUNDS = 8  # oracle unroll; measured min-label fixpoint <= 5 at all SFs
 _DUP_CC_MAX_ROUNDS = 20  # Spark-side loud-fail bound on the contraction loop
 
-# (app, sf, stamp) -> checkpointed (doc_a, doc_b) verified-pair table.
-# The LSH-verified pair set is consumed by the cluster stage AND the
-# curation pipeline (and any dedup audit); at 100 TB it is written ONCE
-# as its own table and every consumer reads it — this cache is the
-# single-node equivalent (same contract as _SIG_CACHE above).
-_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 def verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
+    """Shared checkpointed (doc_a, doc_b) verified-pair table. The
+    LSH-verified pair set is consumed by the cluster stage AND the
+    curation pipeline (and any dedup audit); at 100 TB it is written
+    ONCE as its own table and every consumer reads it — this artifact is
+    the single-node equivalent (same contract as the signature table)."""
+    return shared(
+        spark,
         sf_dir,
-        src_stamp(sf_dir, "documents"),
+        "text.verified_pairs",
+        "documents",
+        lambda: dedup_minhash_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(),
     )
-    if key not in _PAIRS_CACHE:
-        _evict_stale(_PAIRS_CACHE, key)
-        _PAIRS_CACHE[key] = (
-            dedup_minhash_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            .localCheckpoint()
-        )
-    return _PAIRS_CACHE[key]
 
 
 def dup_cc_chain_sql() -> str:
@@ -4683,15 +4609,6 @@ def _dup_cc_oracle() -> str:
     FROM l{_DUP_CC_ROUNDS}"""
 
 
-# (app, sf, stamp) -> checkpointed (doc_id, lbl) contraction-fixpoint
-# labels. Like the pair table above, the cluster/keeper table is
-# materialized once and consumed by both the registered cluster query
-# and the curation pipeline's drop-list stage.
-_CC_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 @query("dedup_cluster_cc", oracle=_dup_cc_oracle())
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS — the final stage of corpus dedup that
@@ -4720,85 +4637,79 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-label propagation reaches — both must produce identical rows,
     hash-checked. Docs with no near-dup pair never enter the graph
     (they keep by default and are not rows here — this operator
-    reports the DUPLICATE mass)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        src_stamp(sf_dir, "documents"),
-    )
-    if key in _CC_CACHE:
-        lbl = _CC_CACHE[key]
-        w = Window.partitionBy("lbl")
-        return lbl.select(
-            "doc_id",
-            F.col("lbl").alias("cluster_id"),
-            (F.col("doc_id") == F.col("lbl")).alias("keep"),
-            F.count(F.lit(1)).over(w).cast("bigint").alias("cluster_size"),
-        )
-    pairs = verified_pairs(spark, sf_dir)
-    # Boruvka-style min-neighbor star contraction, with round 1 taken
-    # DIRECTLY from the pair stream: the doubled (src, dst) edge list is
-    # never materialized — it exists only in-flight feeding a map-side-
-    # combined min-agg (the contraction map) and one map-join + distinct
-    # (the contracted edge set, ~3 orders smaller for near-clique dup
-    # clusters). Each subsequent round contracts the already-tiny graph.
-    # s(v) = min(v, min neighbor): the component minimum is a fixed
-    # point and every other node strictly decreases onto it, so the
-    # fixpoint labels ARE the min-doc_id-per-component the oracle's
-    # plain min-label propagation reaches. Loud bound, never silent.
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-                ),
-                F.struct(
-                    F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-                ),
+    reports the DUPLICATE mass).
+
+    The checkpointed (doc_id, lbl) contraction-fixpoint labels are a
+    shared artifact: like the verified-pair table, the cluster/keeper
+    table is materialized once and consumed by both this query and the
+    curation pipeline's drop-list stage."""
+
+    def build() -> DataFrame:
+        pairs = verified_pairs(spark, sf_dir)
+        # Boruvka-style min-neighbor star contraction, with round 1 taken
+        # DIRECTLY from the pair stream: the doubled (src, dst) edge list is
+        # never materialized — it exists only in-flight feeding a map-side-
+        # combined min-agg (the contraction map) and one map-join + distinct
+        # (the contracted edge set, ~3 orders smaller for near-clique dup
+        # clusters). Each subsequent round contracts the already-tiny graph.
+        # s(v) = min(v, min neighbor): the component minimum is a fixed
+        # point and every other node strictly decreases onto it, so the
+        # fixpoint labels ARE the min-doc_id-per-component the oracle's
+        # plain min-label propagation reaches. Loud bound, never silent.
+        sym = pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
+                    ),
+                )
+            ).alias("e")
+        ).select("e.src", "e.dst")
+        lbl = None
+        cur = sym  # round 1 runs over the in-flight pair stream
+        for _ in range(_DUP_CC_MAX_ROUNDS):
+            smap = (
+                cur.groupBy("src")
+                .agg(F.min("dst").alias("md"))
+                .select(
+                    F.col("src").alias("v"), F.least("src", "md").alias("s")
+                )
+                .localCheckpoint()  # |active nodes| rows — small
             )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    lbl = None
-    cur = sym  # round 1 runs over the in-flight pair stream
-    for _ in range(_DUP_CC_MAX_ROUNDS):
-        smap = (
-            cur.groupBy("src")
-            .agg(F.min("dst").alias("md"))
-            .select(
-                F.col("src").alias("v"), F.least("src", "md").alias("s")
-            )
-            .localCheckpoint()  # |active nodes| rows — small
-        )
-        if lbl is None:
-            # every doc in a verified pair, labeled by round 1's map
-            lbl = smap.select(
-                F.col("v").alias("doc_id"), F.col("s").alias("lbl")
-            ).localCheckpoint()
-        else:
-            lbl = (
-                lbl.join(smap.hint("shuffle_hash"), lbl.lbl == smap.v, "left")
-                .select("doc_id", F.coalesce("s", "lbl").alias("lbl"))
+            if lbl is None:
+                # every doc in a verified pair, labeled by round 1's map
+                lbl = smap.select(
+                    F.col("v").alias("doc_id"), F.col("s").alias("lbl")
+                ).localCheckpoint()
+            else:
+                lbl = (
+                    lbl.join(smap.hint("shuffle_hash"), lbl.lbl == smap.v, "left")
+                    .select("doc_id", F.coalesce("s", "lbl").alias("lbl"))
+                    .localCheckpoint()
+                )
+            sa = smap.select(F.col("v").alias("src"), F.col("s").alias("ss"))
+            sb = smap.select(F.col("v").alias("dst"), F.col("s").alias("sd"))
+            cur = (
+                cur.join(sa.hint("shuffle_hash"), "src")
+                .join(sb.hint("shuffle_hash"), "dst")
+                .filter(F.col("ss") != F.col("sd"))
+                .select(F.col("ss").alias("src"), F.col("sd").alias("dst"))
+                .distinct()
                 .localCheckpoint()
             )
-        sa = smap.select(F.col("v").alias("src"), F.col("s").alias("ss"))
-        sb = smap.select(F.col("v").alias("dst"), F.col("s").alias("sd"))
-        cur = (
-            cur.join(sa.hint("shuffle_hash"), "src")
-            .join(sb.hint("shuffle_hash"), "dst")
-            .filter(F.col("ss") != F.col("sd"))
-            .select(F.col("ss").alias("src"), F.col("sd").alias("dst"))
-            .distinct()
-            .localCheckpoint()
-        )
-        if cur.isEmpty():
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_cluster_cc: no contraction fixpoint within "
-            f"{_DUP_CC_MAX_ROUNDS} rounds"
-        )
-    _evict_stale(_CC_CACHE, key)
-    _CC_CACHE[key] = lbl
+            if cur.isEmpty():
+                break
+        else:
+            raise RuntimeError(
+                f"dedup_cluster_cc: no contraction fixpoint within "
+                f"{_DUP_CC_MAX_ROUNDS} rounds"
+            )
+        return lbl
+
+    lbl = shared(spark, sf_dir, "text.cc_labels", "documents", build)
     w = Window.partitionBy("lbl")
     return lbl.select(
         "doc_id",

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..runtime import register_shared_cache
+from ..runtime import shared
 from ..sources.tables import load
 
 
@@ -127,6 +127,11 @@ def _inrow_topk(v_col: str, k: int, mode: str) -> F.Column:
 # vec_ann_nsw ~35 s CPU, dominated by fold counts), vs ~microseconds
 # vectorized.
 
+# Probe rows scored per numpy pass in `_np_cand_shortlist`: bounds the
+# (rows x candidates) float64 score matrices by this many rows instead
+# of the whole Arrow batch (10000 rows by default).
+_SHORTLIST_CHUNK_ROWS = 1024
+
 
 def _np_cand_shortlist(spark: SparkSession, cents: list, mode: str, k: int):
     """Arrow-batched top-k SHORTLIST of each row's vector against a
@@ -155,7 +160,14 @@ def _np_cand_shortlist(spark: SparkSession, cents: list, mode: str, k: int):
     list_dot_product; the d2 identity composes as the identical
     ((vv - 2*dot) + cc) tree. float32 inputs widen exactly, like the
     fold's CAST(x AS DOUBLE). No Python float-formatting is ever
-    involved in ordering. ``cents``: list of (cid, vector) rows."""
+    involved in ordering. ``cents``: list of (cid, vector) rows.
+
+    Memory bound: probe rows are scored ``_SHORTLIST_CHUNK_ROWS`` at a
+    time, so the kernel's working set is a few (chunk x kc) float64
+    matrices — about 3 x 8 x 1024 x kc bytes (~49 MB at kc = 2000) —
+    whatever the Arrow batch size. Chunking splits rows only; each
+    row's accumulation order is unchanged, so the output is
+    bit-identical to one pass over the whole batch."""
     import numpy as np
 
     C = np.array([list(c[1]) for c in cents], dtype=np.float64)  # (kc, D)
@@ -169,6 +181,7 @@ def _np_cand_shortlist(spark: SparkSession, cents: list, mode: str, k: int):
     want_d2 = mode == "d2_asc"
     if not want_d2 and mode != "dot_desc":  # pragma: no cover
         raise ValueError(mode)
+    chunk = _SHORTLIST_CHUNK_ROWS
 
     @F.pandas_udf("array<struct<score:double,cid:bigint>>")
     def shortlist(v: pd.Series) -> pd.Series:
@@ -178,30 +191,32 @@ def _np_cand_shortlist(spark: SparkSession, cents: list, mode: str, k: int):
         kc = Cm.shape[0]
         if not len(v):  # zero-row Arrow batch: keep the 2-D shape math out
             return pd.Series([], dtype=object)
-        X = _np.array(v.tolist(), dtype=_np.float64)  # (n, D)
-        acc = _np.zeros((X.shape[0], kc))
-        for d in range(Cm.shape[1]):  # sequential fold order per pair
-            acc += X[:, d : d + 1] * Cm[None, :, d]
-        if want_d2:
-            vv = _np.zeros(X.shape[0])
-            for d in range(X.shape[1]):
-                vv = vv + X[:, d] * X[:, d]
-            acc = (vv[:, None] - 2 * acc) + ccv[None, :]
-        sgn = acc if want_d2 else -acc  # ascending = preferred first
-        if kc > k:
-            kth = _np.partition(sgn, k - 1, axis=1)[:, k - 1]
-            keep = sgn <= kth[:, None] + 2e-9
-        else:
-            keep = _np.ones(sgn.shape, dtype=bool)
-        return pd.Series(
-            [
+        X_all = _np.array(v.tolist(), dtype=_np.float64)  # (n, D)
+        out = []
+        for lo in range(0, X_all.shape[0], chunk):
+            X = X_all[lo : lo + chunk]
+            acc = _np.zeros((X.shape[0], kc))
+            for d in range(Cm.shape[1]):  # sequential fold order per pair
+                acc += X[:, d : d + 1] * Cm[None, :, d]
+            if want_d2:
+                vv = _np.zeros(X.shape[0])
+                for d in range(X.shape[1]):
+                    vv = vv + X[:, d] * X[:, d]
+                acc = (vv[:, None] - 2 * acc) + ccv[None, :]
+            sgn = acc if want_d2 else -acc  # ascending = preferred first
+            if kc > k:
+                kth = _np.partition(sgn, k - 1, axis=1)[:, k - 1]
+                keep = sgn <= kth[:, None] + 2e-9
+            else:
+                keep = _np.ones(sgn.shape, dtype=bool)
+            out.extend(
                 [
                     {"score": float(s), "cid": int(c)}
                     for s, c in zip(acc[i][keep[i]], cid_a[keep[i]])
                 ]
                 for i in range(X.shape[0])
-            ]
-        )
+            )
+        return pd.Series(out)
 
     return shortlist
 
@@ -246,26 +261,21 @@ def _np_inrow_topk(
     ).drop("_cs")
 
 
-# Materialized-DataFrame cache shared across queries in one application
-# (the _SIG_CACHE pattern, text.py): keyed by applicationId (survives
-# session reuse, dies with the app) + sf_dir + stage tag. Lets
-# vec_rerank_stub consume vec_ann_lsh's shortlist without recomputing
-# the whole ANN stage, and lets each LSH bucket table be computed ONCE
-# instead of once per plan branch.
-_VEC_CACHE: dict[tuple[str, str, str], DataFrame] = (
-    register_shared_cache({})
-)
-
-
 def _materialized(
     spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _VEC_CACHE:
+    """The shared artifact ``vector.<tag>`` over the embeddings table
+    (runtime.shared): ``build()`` persisted and counted once per session
+    and embeddings version. Lets vec_rerank_stub consume vec_ann_lsh's
+    shortlist without recomputing the whole ANN stage, and lets each LSH
+    bucket table be computed ONCE instead of once per plan branch."""
+
+    def persisted() -> DataFrame:
         df = build().persist()
         df.count()  # force materialization so every consumer hits cache
-        _VEC_CACHE[key] = df
-    return _VEC_CACHE[key]
+        return df
+
+    return shared(spark, sf_dir, f"vector.{tag}", "embeddings", persisted)
 
 
 def _bucket_assign_udf(plane_sets: list[list[list[float]]]):

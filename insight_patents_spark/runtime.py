@@ -1,6 +1,26 @@
-"""Per-query executor-state hygiene for long-lived harness sessions.
+"""Cross-query shared artifacts and per-query executor-state hygiene
+for long-lived harness sessions.
 
-Problem (r10 bench archaeology, VERDICT r10 "Performance"): many
+Shared artifacts: :func:`shared` builds an intermediate that several
+queries read (graph pair/edge snapshot, MinHash signature and tf
+tables, verified pairs, LSH buckets, BPE merges) once per session and
+source version — the graph-snapshot pattern: build once, traverse many
+times. It owns the only artifact dict, keyed ``(applicationId, sf_dir,
+tag, src_stamp(sf_dir, source))``; tags are module-qualified
+(``"graph.edges"``) because all modules share one namespace. ``build``
+materializes its own value (``localCheckpoint()``, ``persist()`` +
+``count()``, or driver scalars). Builds nest (edges read pairs), so a
+value is inserted only after its ``build()`` returns.
+
+Each miss first evicts entries of a dead application (their pinned
+checkpoints are unreclaimable) and the same ``(sf_dir, tag)`` under a
+superseded stamp; other sf_dirs and tags stay. A dropped localCheckpoint
+goes at the next :func:`release_ephemeral`; a dropped ``persist()``-ed
+artifact is unpersisted at once, because Spark's CacheManager matches
+cached data by plan and would serve a rebuild over a regenerated file
+at the same path the old rows.
+
+Release (r10 bench archaeology, VERDICT r10 "Performance"): many
 operators ``localCheckpoint()`` small intermediates — loop frontiers,
 probe batches, signature tables — because lazy multi-stage plans blow up
 in Catalyst re-optimization. A localCheckpoint pins its blocks in
@@ -16,21 +36,18 @@ finally executes them. The release point is the harness, after the
 result is fully consumed — which is what :func:`release_ephemeral`
 provides.
 
-What must survive a release: the shared caches (text.py ``_SIG_CACHE``
-/ ``_PAIRS_CACHE`` / ``_CC_CACHE``, graph.py ``_PAIR_CACHE`` /
-``_EDGE_CACHE`` / ``_LPA_CACHE``, ...) hold localCheckpointed
+What must survive a release: the shared artifacts hold localCheckpointed
 DataFrames reused ACROSS queries; unpersisting a localCheckpoint is
 unrecoverable (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` on next touch —
-verified empirically, there is no recompute fallback). Each cache
-module registers its dict here at import; a release walks the cached
-DataFrames' analyzed plans, collects the persistent RDD ids behind
-their ``LogicalRDD`` leaves, and protects exactly those.
+verified empirically, there is no recompute fallback). A release walks
+the artifact dict's DataFrames' analyzed plans, collects the persistent
+RDD ids behind their ``LogicalRDD`` leaves, and protects exactly those.
 
-SQL-cached DataFrames (``.persist()``+count, e.g. vector.py
-``_VEC_CACHE``) are left alone entirely: only RDDs whose
-``checkpointData`` is defined (i.e. localCheckpoints) are candidates.
-Persist-based cache blocks are evictable/recomputable by Spark's own
-storage manager, so they are not a leak in the same sense.
+SQL-cached DataFrames (``.persist()``+count, e.g. the vector LSH bucket
+tables) are left alone entirely: only RDDs whose ``checkpointData`` is
+defined (i.e. localCheckpoints) are candidates. Persist-based cache
+blocks are evictable/recomputable by Spark's own storage manager, so
+they are not a leak in the same sense.
 
 At 1000-executor scale the same discipline applies unchanged: a
 long-lived driver serving many queries must bound pinned storage, and
@@ -41,42 +58,60 @@ is the production form of this hook.
 from __future__ import annotations
 
 import logging
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources.tables import src_stamp
+
 _LOG = logging.getLogger(__name__)
+
+_T = TypeVar("_T")
 
 
 class PlanScanError(RuntimeError):
-    """A shared-cache DataFrame's plan could not be scanned for its
-    checkpoint RDD ids. Protection must be exact (releasing a live
-    localCheckpoint is unrecoverable), so this aborts the release cycle
-    instead of silently leaving the cache unprotected."""
-
-# (cache_dict, extractor) pairs; extractor(value) yields the DataFrames
-# inside one cache value (values are DataFrames or tuples containing one).
-_SHARED_CACHES: list[tuple[dict, Callable[[Any], Iterable[DataFrame]]]] = []
+    """A shared artifact's plan could not be scanned for its checkpoint
+    RDD ids. Protection must be exact (releasing a live localCheckpoint
+    is unrecoverable), so this aborts the release cycle instead of
+    silently leaving the artifact unprotected."""
 
 
-def _default_extract(value: Any) -> Iterable[DataFrame]:
-    if isinstance(value, DataFrame):
-        return (value,)
-    if isinstance(value, (tuple, list)):
-        return tuple(v for v in value if isinstance(v, DataFrame))
-    return ()
+# (applicationId, sf_dir, tag, src_stamp) -> artifact: a DataFrame, a
+# tuple holding DataFrames and scalars, or plain driver values.
+# applicationId, not id(spark): Python may reuse an id after GC.
+_SHARED: dict[tuple[str, str, str, str], Any] = {}
 
 
-def register_shared_cache(
-    cache: dict,
-    extract: Callable[[Any], Iterable[DataFrame]] = _default_extract,
-) -> dict:
-    """Mark ``cache``'s DataFrames as protected from release_ephemeral.
+def shared(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    source: str,
+    build: Callable[[], _T],
+) -> _T:
+    """The ``tag`` artifact for ``sf_dir``, built by ``build()`` on the
+    first call per (session, version of source table ``source``) and
+    returned as is to every later call (module doc: key, eviction,
+    release protection)."""
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, tag, src_stamp(sf_dir, source))
+    if key in _SHARED:
+        return _SHARED[key]
+    for k in [k for k in _SHARED if k[0] != app or k[1:3] == (sf_dir, tag)]:
+        old = _SHARED.pop(k)
+        if k[0] == app:
+            for df in _frames(old):
+                if df.is_cached:
+                    df.unpersist()
+    value = build()
+    _SHARED[key] = value
+    return value
 
-    Returns the dict so it can be used inline at definition site.
-    """
-    _SHARED_CACHES.append((cache, extract))
-    return cache
+
+def _frames(value: Any) -> tuple[DataFrame, ...]:
+    """The DataFrames inside one artifact (itself, or a tuple's)."""
+    parts = value if isinstance(value, (tuple, list)) else (value,)
+    return tuple(v for v in parts if isinstance(v, DataFrame))
 
 
 def _plan_rdd_ids(df: DataFrame) -> set[int]:
@@ -88,7 +123,7 @@ def _plan_rdd_ids(df: DataFrame) -> set[int]:
 
     Raises :class:`PlanScanError` if the plan cannot be read — the
     caller must fail CLOSED (skip releasing), because an unscanned
-    cache value may own checkpoints that a release would destroy.
+    artifact may own checkpoints that a release would destroy.
     """
     ids: set[int] = set()
     try:
@@ -99,34 +134,33 @@ def _plan_rdd_ids(df: DataFrame) -> set[int]:
                 ids.add(int(leaf.rdd().id()))
     except Exception as exc:  # noqa: BLE001 — fail closed, not open
         raise PlanScanError(
-            f"cannot scan shared-cache plan for checkpoint ids: {exc!r}"
+            f"cannot scan shared-artifact plan for checkpoint ids: {exc!r}"
         ) from exc
     return ids
 
 
 def protected_rdd_ids() -> set[int]:
-    """Union of checkpoint RDD ids owned by registered shared caches.
+    """Union of checkpoint RDD ids owned by the shared artifacts.
 
-    Propagates :class:`PlanScanError` from any unreadable cache value —
+    Propagates :class:`PlanScanError` from any unreadable artifact —
     callers that unpersist must treat that as "protection unknown" and
     release nothing this cycle.
     """
     ids: set[int] = set()
-    for cache, extract in _SHARED_CACHES:
-        for value in list(cache.values()):
-            for df in extract(value):
-                ids |= _plan_rdd_ids(df)
+    for value in list(_SHARED.values()):
+        for df in _frames(value):
+            ids |= _plan_rdd_ids(df)
     return ids
 
 
 def release_ephemeral(spark: SparkSession) -> list[int]:
-    """Unpersist localCheckpoint RDDs not owned by a shared cache.
+    """Unpersist localCheckpoint RDDs not owned by a shared artifact.
 
     Call ONLY after the current query's result has been fully consumed
     (sink committed / collected): released checkpoints cannot be
     recomputed. Returns the released RDD ids (diagnostics/tests).
 
-    Fails CLOSED: if any shared cache's plan cannot be scanned, the
+    Fails CLOSED: if any shared artifact's plan cannot be scanned, the
     protected set is unknown, so nothing is released this cycle (a
     leaked checkpoint costs memory; a wrongly released one costs the
     query — CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND with no recompute path).

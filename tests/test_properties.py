@@ -4633,6 +4633,36 @@ def test_cosine_topk_skips_null_label(spark, sf_dir, tmp_path):
     assert len(got) == 3 * (t.num_rows - 1)
 
 
+def test_cand_shortlist_chunked_matches_one_pass(spark, monkeypatch):
+    """_np_cand_shortlist scores a large Arrow batch _SHORTLIST_CHUNK_ROWS
+    probe rows at a time: with the chunk lowered to 7 rows (uneven last
+    chunk), 3000 rows against 300 candidates give a shortlist
+    bit-identical to one pass over the whole batch, in both modes."""
+    import random
+
+    import pandas as pd
+
+    import insight_patents_spark.operators.vector as vec_mod
+
+    rng = random.Random(11)
+    dim = 16
+    cents = [
+        (cid, [rng.uniform(-1, 1) for _ in range(dim)])
+        for cid in rng.sample(range(10**6), 300)
+    ]
+    batch = pd.Series(
+        [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(3000)]
+    )
+    for mode in ("dot_desc", "d2_asc"):
+        monkeypatch.setattr(vec_mod, "_SHORTLIST_CHUNK_ROWS", len(batch))
+        whole = vec_mod._np_cand_shortlist(spark, cents, mode, 3).func(batch)
+        monkeypatch.setattr(vec_mod, "_SHORTLIST_CHUNK_ROWS", 7)
+        chunked = vec_mod._np_cand_shortlist(spark, cents, mode, 3).func(batch)
+        assert len(whole) == len(batch)
+        assert all(len(r) >= 3 for r in whole)
+        assert chunked.tolist() == whole.tolist(), mode
+
+
 def test_hashing_trick_high_cardinality_vocab(spark, tmp_path, monkeypatch):
     """text_hashing_trick over a vocabulary far above its memo cap (cap
     lowered to 64 so every task clears its memo many times), plus a NULL
@@ -8872,19 +8902,39 @@ def test_icws_collision_probability_is_weighted_jaccard():
     assert abs(hits / n - jw) < 4 * sigma, (hits / n, jw)
 
 
-def test_evict_stale_cache_policy():
-    """The checkpoint-cache evictor (ADVICE r9): dead-application
-    entries and superseded same-sf stamps are dropped; live entries for
-    OTHER sf_dirs in the same app survive."""
-    from insight_patents_spark.operators.text import _evict_stale
+def test_evict_stale_cache_policy(monkeypatch):
+    """The shared-artifact evictor (ADVICE r9), run by runtime.shared
+    once per miss: dead-application entries and a superseded stamp of
+    the same (sf_dir, tag) are dropped; other sf_dirs and other tags in
+    the live application survive. A hit builds nothing, and a nested
+    build's artifact is kept beside its consumer's."""
+    from types import SimpleNamespace
 
-    cache = {
-        ("dead-app", "sfA", "s1"): 1,
-        ("live-app", "sfA", "s0"): 2,  # superseded stamp
-        ("live-app", "sfB", "s9"): 3,  # other sf_dir, still live
+    from insight_patents_spark import runtime
+
+    arts = {
+        ("dead-app", "sfA", "t", "s1"): 1,
+        ("live-app", "sfA", "t", "s0"): 2,  # superseded stamp
+        ("live-app", "sfB", "t", "s9"): 3,  # other sf_dir, still live
+        ("live-app", "sfA", "u", "s0"): 4,  # other tag, still live
     }
-    _evict_stale(cache, ("live-app", "sfA", "s1"))
-    assert cache == {("live-app", "sfB", "s9"): 3}
+    monkeypatch.setattr(runtime, "_SHARED", arts)
+    monkeypatch.setattr(runtime, "src_stamp", lambda sf_dir, source: "s1")
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="live-app"))
+    assert runtime.shared(spark, "sfA", "t", "documents", lambda: 5) == 5
+    assert arts == {
+        ("live-app", "sfB", "t", "s9"): 3,
+        ("live-app", "sfA", "u", "s0"): 4,
+        ("live-app", "sfA", "t", "s1"): 5,
+    }
+    assert runtime.shared(spark, "sfA", "t", "documents", lambda: 1 / 0) == 5
+
+    def outer() -> int:
+        return runtime.shared(spark, "sfB", "inner", "documents", lambda: 6) + 1
+
+    assert runtime.shared(spark, "sfB", "outer", "documents", outer) == 7
+    assert arts[("live-app", "sfB", "inner", "s1")] == 6
+    assert arts[("live-app", "sfB", "outer", "s1")] == 7
 
 
 def test_vec_ann_nsw_grounding_matches_python_replay(spark, sf_dir):

@@ -2,7 +2,7 @@
 
 Pins the r11 fix for the r10 full-bench inflation: ephemeral
 localCheckpoints are unpersisted after a query's result is consumed,
-while shared-cache checkpoints (and persist()-based SQL caches) survive
+while shared-artifact checkpoints (and persist()-based SQL caches) survive
 and their downstream consumers still execute. Unpersisting a live
 localCheckpoint is unrecoverable (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND),
 so the protection logic is load-bearing, not an optimization.
@@ -77,27 +77,50 @@ def test_release_leaves_sql_cache_alone(spark):
     df.unpersist()
 
 
-def test_release_fails_closed_on_plan_scan_error(spark):
-    # An unscannable shared-cache value means the protected set is
-    # unknown — the hook must release NOTHING that cycle rather than
-    # risk destroying the cache's live checkpoints (ADVICE r11).
+def test_release_fails_closed_on_plan_scan_error(spark, monkeypatch):
+    # An unscannable shared artifact means the protected set is unknown
+    # — the hook must release NOTHING that cycle rather than risk
+    # destroying the artifacts' live checkpoints (ADVICE r11).
     cp = spark.range(256).localCheckpoint()
     cp_id = int(
         cp._jdf.queryExecution().analyzed().collectLeaves().apply(0).rdd().id()
     )
-    # extract yields a non-DataFrame whose plan scan raises
-    poison = {"bad": object()}
-    runtime.register_shared_cache(poison, extract=lambda v: (v,))
-    try:
+    # a DataFrame artifact whose plan scan raises
+    poison = spark.range(1)
+    poison._jdf = None
+    with monkeypatch.context() as m:
+        m.setitem(runtime._SHARED, ("app", "sf", "test.poison", "s"), poison)
         released = runtime.release_ephemeral(spark)
         assert released == []
         assert cp_id in _persistent_ids(spark)
-    finally:
-        runtime._SHARED_CACHES[:] = [
-            (c, e) for c, e in runtime._SHARED_CACHES if c is not poison
-        ]
     # with the poison gone the same checkpoint is released normally
     assert cp_id in runtime.release_ephemeral(spark)
+
+
+def test_regenerated_embeddings_rebuild_shared_artifact(spark, sf_dir, tmp_path):
+    # The persisted LSH bucket table is a shared artifact keyed by the
+    # embeddings' source stamp: regenerating the file in the same
+    # session (other rows, new mtime) must rebuild it, not serve the
+    # table built from the old file — neither from the artifact dict nor
+    # from Spark's SQL cache, which matches the rebuild's plan (same
+    # path, same schema) to the old persisted one.
+    from insight_patents_spark.operators.vector import _lsh_bucket_table
+
+    path = tmp_path / "embeddings.parquet"
+    shutil.copyfile(f"{sf_dir}/embeddings.parquet", path)
+    d = str(tmp_path)
+    t = pq.read_table(path)
+    first = _lsh_bucket_table(spark, d)
+    assert first.count() == t.num_rows
+    assert _lsh_bucket_table(spark, d) is first  # a hit
+    pq.write_table(t.slice(0, t.num_rows // 2), path)
+    st = os.stat(path)
+    os.utime(path, (st.st_atime, st.st_mtime + 10))
+    again = _lsh_bucket_table(spark, d)
+    assert again is not first
+    assert again.count() == t.num_rows // 2
+    # the superseded SQL cache is dropped, not matched by plan
+    assert not first.is_cached
 
 
 def test_ephemeral_checkpoints_do_not_accumulate(spark, sf_dir):
